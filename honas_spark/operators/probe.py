@@ -4,6 +4,8 @@ Reproduces honas-search's probe loop (src/bin/honas_search.c:373-421 +
 src/honas_state.c:456-474): every queried SHA-256 is checked against every
 filter of every sketch row (with the per-filter hash transform); the result
 per (sketch row, key) is a hit count and a per-filter hit bitmask.
+`search_probe` runs a whole search job in the same pass and keeps only
+the rows the result needs.
 
 Scale shape: the query set is tiny (a search job), the sketch table is the
 big side -> the queries are precomputed on the driver (offsets per filter
@@ -24,6 +26,49 @@ from ..spec import SketchSpec
 from ..state import SketchState
 
 
+def _unzip_queries(queries: Sequence[tuple]) -> list:
+    """-> object arrays (group ids, keys, SHAs); a None group id (ids are
+    optional in the job format, README.md:296-339) rides Arrow as null."""
+    cols = list(zip(*queries)) or [(), (), ()]
+    return [np.array(c, dtype=object) for c in cols]
+
+
+def _query_offsets(shas: list, spec: SketchSpec) -> list:
+    """Per filter index, the (nq, k) Bloom offsets of every queried SHA.
+    Derived executor-side: the closure ships 32-byte SHAs, not k*F
+    offsets per key, and the derivation runs in parallel per task."""
+    limbs = K.hashes_to_limbs(shas, spec.hash_len)
+    return [
+        K.bloom_offsets(K.transform_limbs(limbs, fi), spec.m_bits, spec.k)
+        for fi in range(spec.num_filters)
+    ]
+
+
+def _probe_rows(pdf: pd.DataFrame, spec: SketchSpec, offsets: list):
+    """Probe every query against every sketch row of one Arrow batch.
+
+    Each row's filters are unpacked once; CMS/KLL are never decoded.
+    -> (hits (R x nq), filters_hit bitmasks (R x nq), bits set per
+    filter (R x F), est_clients (R,), est_items (R,)), all int64."""
+    R, nq, nf = len(pdf), len(offsets[0]), spec.num_filters
+    hits = np.zeros((R, nq), dtype=np.int64)
+    masks = np.zeros((R, nq), dtype=np.int64)
+    bits = np.zeros((R, nf), dtype=np.int64)
+    est = np.zeros((2, R), dtype=np.int64)
+    for i, (fb, hc, hi) in enumerate(zip(
+        pdf["filters"], pdf["hll_clients"], pdf["hll_items"]
+    )):
+        filters = K.bloom_unpack(fb, nf, spec.filter_bytes)
+        for fi in range(nf):
+            hit = K.bloom_probe(filters[fi], offsets[fi])
+            hits[i] += hit
+            masks[i] |= hit.astype(np.int64) << fi
+            bits[i, fi] = K.bloom_bits_set(filters[fi])
+        est[0, i] = K.hll_count(K.hll_unpack(hc))
+        est[1, i] = K.hll_count(K.hll_unpack(hi))
+    return hits, masks, bits, est[0], est[1]
+
+
 def probe_sketches(
     sketch_df: DataFrame,
     spec: SketchSpec,
@@ -38,12 +83,8 @@ def probe_sketches(
       (n_rows, est_clients, est_items, total_bits_set).
     """
     group_cols = list(group_cols)
-    qlist = list(queries)
-    # object dtype: group ids are optional in the reference job format
-    # (README.md:296-339) — None rides the Arrow long column as null
-    gids = np.array([q[0] for q in qlist], dtype=object)
-    keys = [q[1] for q in qlist]
-    shas = [q[2] for q in qlist]
+    gids, keys_arr, shas = _unzip_queries(queries)
+    nq = len(shas)
 
     from .sketch_agg import _group_fields_ddl
 
@@ -54,78 +95,125 @@ def probe_sketches(
         " total_bits_set long"
     )
 
-    nq = len(qlist)
-    keys_arr = np.array(keys, dtype=object)
-
     def probe(batches):
-        # offsets are derived executor-side (vectorized numpy over all
-        # queries x filters): the closure ships only the 32-byte SHAs
-        # instead of k*F precomputed offsets per key — ~10x less task
-        # payload for large query sets, and the derivation runs in
-        # parallel across sketch partitions instead of serial on the
-        # driver.  Lazily, so empty partitions pay nothing.
-        per_filter_offsets = None
+        offsets = None  # lazily: empty partitions pay nothing
         for pdf in batches:
             if pdf.empty or nq == 0:
                 continue
-            if per_filter_offsets is None:
-                limbs = K.hashes_to_limbs(shas, spec.hash_len)
-                per_filter_offsets = [
-                    K.bloom_offsets(
-                        K.transform_limbs(limbs, fi), spec.m_bits, spec.k
-                    )
-                    for fi in range(spec.num_filters)
-                ]
+            if offsets is None:
+                offsets = _query_offsets(shas, spec)
+            hits, masks, bits, est_c, est_i = _probe_rows(pdf, spec, offsets)
             # block assembly: the (R sketch rows x nq keys) output is
             # built from preallocated numpy matrices + repeat/tile — no
             # per-row Python lists, so a 10k-key job costs numpy time,
             # not interpreter time
             R = len(pdf)
-            hits_mat = np.zeros((R, nq), dtype=np.int64)
-            mask_mat = np.zeros((R, nq), dtype=np.int64)
-            total_bits = np.zeros(R, dtype=np.int64)
-            est_clients = np.zeros(R, dtype=np.int64)
-            est_items = np.zeros(R, dtype=np.int64)
-            filt_col = pdf["filters"].to_numpy()
-            hllc_col = pdf["hll_clients"].to_numpy()
-            hlli_col = pdf["hll_items"].to_numpy()
-            for i in range(R):
-                # lightweight parse: the probe needs only the filters and
-                # HLLs — skip CMS/KLL deserialization entirely
-                filters = K.bloom_unpack(
-                    filt_col[i], spec.num_filters, spec.filter_bytes
-                )
-                hm, mm = hits_mat[i], mask_mat[i]
-                for fi in range(spec.num_filters):
-                    hit = K.bloom_probe(
-                        filters[fi], per_filter_offsets[fi]
-                    )
-                    hm += hit
-                    mm |= hit.astype(np.int64) << fi
-                    total_bits[i] += K.bloom_bits_set(filters[fi])
-                est_clients[i] = K.hll_count(
-                    K.hll_unpack(hllc_col[i])
-                )
-                est_items[i] = K.hll_count(
-                    K.hll_unpack(hlli_col[i])
-                )
             data = {
                 c: pdf[c].repeat(nq).reset_index(drop=True)
                 for c in group_cols
             }
-            data["group_id"] = np.tile(gids, R)
-            data["key"] = np.tile(keys_arr, R)
-            data["hits"] = hits_mat.reshape(-1)
-            data["filters_hit"] = mask_mat.reshape(-1)
-            data["n_rows"] = np.repeat(
-                pdf["n_rows"].to_numpy(dtype=np.int64), nq
+            data.update(
+                group_id=np.tile(gids, R), key=np.tile(keys_arr, R),
+                hits=hits.reshape(-1), filters_hit=masks.reshape(-1),
+                n_rows=np.repeat(pdf["n_rows"].to_numpy(dtype=np.int64), nq),
+                est_clients=np.repeat(est_c, nq),
+                est_items=np.repeat(est_i, nq),
+                total_bits_set=np.repeat(bits.sum(axis=1), nq),
             )
-            data["est_clients"] = np.repeat(est_clients, nq)
-            data["est_items"] = np.repeat(est_items, nq)
-            data["total_bits_set"] = np.repeat(total_bits, nq)
             yield pd.DataFrame(data)
 
     return sketch_df.mapInPandas(probe, schema=out_schema)
+
+
+def search_probe(
+    sketch_df: DataFrame,
+    spec: SketchSpec,
+    queries: Sequence[tuple],
+    group_cols: Sequence[str],
+    flatten_on: str = "clients",
+) -> DataFrame:
+    """A whole search job in ONE pass (honas_search.c:188-217, 303-314).
+
+    Per sketch row: probe every key, clamp hits to 0/1 when the
+    `flatten_on` estimate is below `flatten_threshold`, and reduce
+    each group id's keys (AND of their filter masks; all / any found).
+    Only the rows the result keeps come out, tagged by `kind`:
+      "key"   raw hits >= u; `hits` clamped, `raw_hits`, `filters_hit`
+      "group" any key found; `hits` = hits_by_all_hostnames, `raw_hits`
+              / `filters_hit` = the AND popcount / mask
+      "info"  one per sketch row; `filter_bits` = bits set per filter
+    each with its sketch row's group cols and diagnostics."""
+    group_cols = list(group_cols)
+    gids, keys_arr, shas = _unzip_queries(queries)
+    # one code per distinct group id (null ids form one group); the
+    # stable order keeps a group's keys contiguous for reduceat
+    code_of: dict = {}
+    codes = np.array([code_of.setdefault(g, len(code_of)) for g in gids])
+    ugids = np.array(list(code_of), dtype=object)
+    order = np.argsort(codes, kind="stable")
+    starts = np.searchsorted(codes[order], np.arange(len(ugids)))
+    u = spec.filters_per_user
+
+    from .sketch_agg import _group_fields_ddl
+
+    out_schema = (
+        f"{_group_fields_ddl(sketch_df, group_cols)}, n_rows long,"
+        " first_ts timestamp, last_ts timestamp, kind string,"
+        " group_id long, key string, hits long, raw_hits long,"
+        " filters_hit long, flattened boolean, est_clients long,"
+        " est_items long, total_bits_set long, filter_bits array<long>"
+    )
+
+    def probe(batches):
+        offsets = None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            if offsets is None:
+                offsets = _query_offsets(shas, spec)
+            hits, masks, bits, est_c, est_i = _probe_rows(pdf, spec, offsets)
+            est = est_c if flatten_on == "clients" else est_i
+            flat = (est < spec.flatten_threshold)[:, None]
+            # reference clamp (honas_search.c:200-201): hits < u ? 0 : 1
+            clamp = np.where(flat, hits >= u, hits)
+            found = clamp[:, order] > 0
+            and_mask = np.bitwise_and.reduceat(
+                masks[:, order], starts, axis=1
+            )
+            and_pop = sum((and_mask >> f) & 1 for f in range(spec.num_filters))
+            by_all = np.where(flat, and_pop >= u, and_pop) * (
+                np.logical_and.reduceat(found, starts, axis=1)
+            )
+            kr, kq = np.nonzero(hits >= u)
+            gr, gg = np.nonzero(np.logical_or.reduceat(found, starts, axis=1))
+            R, ng = len(pdf), len(gr)
+            ri = np.concatenate([kr, gr, np.arange(R)])
+            none, zeros = np.full(ng + R, None), np.zeros(R, dtype=np.int64)
+            out = {
+                c: pdf[c].to_numpy()[ri]
+                for c in group_cols + ["n_rows", "first_ts", "last_ts"]
+            }
+            parts = {
+                "kind": (["key"] * len(kr), ["group"] * ng, ["info"] * R),
+                "group_id": (gids[kq], ugids[gg], none[ng:]),
+                "key": (keys_arr[kq], none),
+                "hits": (clamp[kr, kq], by_all[gr, gg], zeros),
+                "raw_hits": (hits[kr, kq], and_pop[gr, gg], zeros),
+                "filters_hit": (masks[kr, kq], and_mask[gr, gg], zeros),
+            }
+            out.update({c: np.concatenate(p) for c, p in parts.items()})
+            out.update(
+                flattened=flat[:, 0][ri], est_clients=est_c[ri],
+                est_items=est_i[ri], total_bits_set=bits.sum(axis=1)[ri],
+                filter_bits=[None] * (len(ri) - R) + bits.tolist(),
+            )
+            yield pd.DataFrame(out)
+
+    # only the columns the pass reads cross into Python (no CMS / KLL)
+    return sketch_df.select(
+        *group_cols, "filters", "hll_clients", "hll_items", "n_rows",
+        "first_ts", "last_ts",
+    ).mapInPandas(probe, schema=out_schema)
 
 
 def cms_probe(

@@ -629,15 +629,18 @@ def gopher_rules(
     # dominated this operator's runtime:
     #   n_words   = count of \S+ runs
     #   sum_len   = chars left after deleting every \s run
-    #   n_alpha   = runs containing [a-zA-Z]: the regex scanner emits
-    #               exactly one non-overlapping \S*[a-zA-Z]\S* match
-    #               per such run (greedy \S* consumes the whole run;
-    #               \S cannot cross whitespace)
+    #   n_alpha   = runs containing [a-zA-Z]: n_words minus the
+    #               letter-free runs, each matched whole by
+    #               (?<!\S)[^a-zA-Z\s]+(?!\S) — linear, where the
+    #               direct \S*[a-zA-Z]\S* backtracks quadratically
+    #               through a long letter-free token
     #   n_stop    = whole-token stopword matches, delimited by the
     #               width-1 lookarounds (?<!\S) / (?!\S)
     n_words = F.regexp_count(c, F.lit(r"\S+"))
     sum_len = F.length(F.regexp_replace(c, r"\s+", ""))
-    n_alpha = F.regexp_count(c, F.lit(r"\S*[a-zA-Z]\S*"))
+    n_alpha = n_words - F.regexp_count(
+        c, F.lit(r"(?<!\S)[^a-zA-Z\s]+(?!\S)")
+    )
     # non-overlapping occurrence counts via replace-shrinkage — both
     # engines replace greedily left-to-right, so the counts agree
     n_symbols = (

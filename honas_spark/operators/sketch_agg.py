@@ -184,14 +184,11 @@ def build_sketches(
     # JVM hash aggregate stitched back with a broadcast join.
     inline_ts = bool(ts_col) and not distinct_keys
     cols = group_cols + [key_sha_col]
-    if client_hash_col:
-        cols.append(client_hash_col)
-    elif client_col:
-        cols.append(client_col)
-    if value_col:
-        cols.append(value_col)
-    if inline_ts and ts_col not in cols:
-        cols.append(ts_col)
+    # each column once: a group column may double as the client column
+    # (per-repo sketches), and a duplicate breaks the worker's groupby
+    for c in (client_hash_col or client_col, value_col, inline_ts and ts_col):
+        if c and c not in cols:
+            cols.append(c)
     slim = df.select(*cols)
     if distinct_keys:
         dd_cols = [c for c in cols if c != value_col]
@@ -233,7 +230,7 @@ def build_sketches(
         pending: list[pd.DataFrame] = []
         pending_rows = 0
 
-        def flush_all_bulk() -> None:
+        def flush_all_bulk(last: bool = False) -> None:
             """Flush EVERY buffered row in one vectorized pass.  A
             per-group flush would pay the Bloom offset-derivation
             kernel's fixed per-call cost (~0.5 ms of k x n_limbs
@@ -312,11 +309,15 @@ def build_sketches(
             # grouped scatter: ONE hll/cms kernel call covers every
             # buffered group (bit-identical — register max / counter
             # add commute), instead of paying the numpy fixed call
-            # cost 3x per group.  Fresh states adopt the matrix row
-            # as a view; a state that already absorbed an earlier
-            # bulk flush folds its row in with the same merge algebra.
+            # cost 3x per group.  Fresh states adopt a copy of their
+            # row while more input may follow (a view would pin the
+            # whole scratch through later flushes) and the row itself
+            # in the last flush (serialized at once; copies there only
+            # grew the worker heap); a state that already absorbed an
+            # earlier flush folds its row in with the same merge algebra.
             # Guarded by a byte cap so a pathological group count
             # cannot allocate an oversized scratch matrix.
+            adopt = (lambda row: row) if last else np.copy
             hll_mats = cms_mat = None
             if "hll" in comp and G * 2 * K.HLL_REGISTERS <= _SCATTER_MAX_BYTES:
                 hll_mats = np.zeros((2, G, K.HLL_REGISTERS), dtype=np.uint8)
@@ -353,8 +354,8 @@ def build_sketches(
                         K.hll_add(st.hll_items, item_h64[s:e])
                         K.hll_add(st.hll_clients, ch[s:e])
                     elif fresh:
-                        st.hll_items = hll_mats[0, gi]
-                        st.hll_clients = hll_mats[1, gi]
+                        st.hll_items = adopt(hll_mats[0, gi])
+                        st.hll_clients = adopt(hll_mats[1, gi])
                     else:
                         np.maximum(
                             st.hll_items, hll_mats[0, gi],
@@ -368,7 +369,7 @@ def build_sketches(
                     if cms_mat is None:
                         K.cms_add(st.cms, item_h64[s:e])
                     elif fresh:
-                        st.cms = cms_mat[gi]
+                        st.cms = adopt(cms_mat[gi])
                     else:
                         st.cms += cms_mat[gi]
                 if vals is not None:
@@ -404,7 +405,7 @@ def build_sketches(
             pending_rows += len(pdf)
             if pending_rows >= bulk_flush_rows:
                 flush_all_bulk()
-        flush_all_bulk()
+        flush_all_bulk(last=True)
         if states:  # empty partitions yield nothing (Arrow needs typed cols)
             yield _states_to_pdf(states, group_cols)
 

@@ -15,7 +15,7 @@ Result semantics (src/bin/honas_search.c:129-421):
     of the per-key filter-hit bitmasks across ALL keys of the group — any
     missing key zeroes it (honas_search.c:303-314)
 
-Everything after the probe is plain DataFrame expressions."""
+The probe pass applies all three rules; `run_search` projects its rows."""
 
 from __future__ import annotations
 
@@ -26,8 +26,10 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import kernels as K
 from .spec import SketchSpec
-from .operators.probe import probe_sketches
+# probe_sketches stays importable here: perfbench traces it by this name
+from .operators.probe import probe_sketches, search_probe  # noqa: F401
 from .operators.common import duckdb_round
 
 
@@ -185,118 +187,80 @@ def run_search(
     if flatten_on not in ("clients", "hostnames"):
         raise ValueError(f"flatten_on must be clients|hostnames: {flatten_on}")
     group_cols = list(group_cols)
-    queries = parse_search_job(job)
-    probed = probe_sketches(sketch_df, spec, queries, group_cols)
-
-    u_lit = F.lit(spec.filters_per_user)
-    est_col = "est_clients" if flatten_on == "clients" else "est_items"
-    flattened = F.col(est_col) < F.lit(spec.flatten_threshold)
-    # Flatten clamp per the reference (honas_search.c:200-201):
-    # hits = hits < filters_per_user ? 0 : 1 — NOT least(hits, 1), which
-    # would report 1 for a key whose raw hits are in [1, u-1].
-    probed = probed.withColumn("flattened", flattened).withColumn(
-        "hits_out",
-        F.when(
-            flattened,
-            F.when(F.col("hits") < u_lit, F.lit(0)).otherwise(F.lit(1)),
-        ).otherwise(F.col("hits")),
+    # ONE pass answers the whole job (flatten clamp, per-key threshold,
+    # group AND all run in `search_probe`); the two frames below are
+    # projections of its rows, with no shuffle
+    probed = search_probe(
+        sketch_df, spec, parse_search_job(job), group_cols, flatten_on
     )
 
-    # group AND over ALL keys (before the per-key threshold filter).
-    # Reference semantics (honas_search.c:188-217, 303-314):
-    #   * a group is emitted only if at least one key had post-flatten
-    #     hits > 0 (group_has_results)
-    #   * hits_by_all_hostnames = popcount of the AND of per-key masks,
-    #     zeroed unless EVERY key had post-flatten hits > 0
-    #     (group_all_host_names_found), with the same flatten clamp.
-    group_df = (
-        probed.groupBy(*group_cols, "group_id")
-        .agg(
-            F.bit_count(F.bit_and(F.col("filters_hit"))).alias("and_pop"),
-            F.max("flattened").alias("flattened"),
-            F.min((F.col("hits_out") > 0).cast("int")).alias("all_found"),
-            F.max((F.col("hits_out") > 0).cast("int")).alias("has_results"),
-        )
-        .withColumn(
-            "hits_by_all_hostnames",
-            F.when(F.col("all_found") == 0, F.lit(0)).otherwise(
-                F.when(
-                    F.col("flattened"),
-                    F.when(F.col("and_pop") < u_lit, F.lit(0)).otherwise(
-                        F.lit(1)
-                    ),
-                ).otherwise(F.col("and_pop"))
-            ),
-        )
-        .filter(F.col("has_results") == 1)
-        .drop("and_pop", "all_found", "has_results")
-    )
-
-    # D5: coarse per-key client estimate from the hit count (a key seen
-    # by more distinct clients lands in more of the F filters;
+    # D5: coarse per-key client estimate from the raw hit count (a key
+    # seen by more distinct clients lands in more of the F filters;
     # README.md:273-279) — invert E[touched] = F(1-(1-u/F)^c)
     F_, u_ = spec.num_filters, spec.filters_per_user
     base = 1.0 - u_ / F_
+    raw = F.col("raw_hits")
     # hits == F means "all filters touched" — the inversion diverges, so
     # emit null ("at least everyone", keeps the JSON standard-parseable)
-    est_clients_for_hits = F.when(F.col("hits") <= 0, F.lit(0.0)).otherwise(
-        F.when(F.col("hits") >= F_, F.lit(None).cast("double")).otherwise(
-            F.log(1.0 - F.col("hits") / F_) / math.log(base)
+    est_clients_for_hits = F.when(raw <= 0, F.lit(0.0)).otherwise(
+        F.when(raw >= F_, F.lit(None).cast("double")).otherwise(
+            F.log(1.0 - raw / F_) / math.log(base)
             if base > 0
             else F.lit(1.0)
         )
     )
-
-    key_df = (
-        probed.filter(F.col("hits") >= F.lit(spec.filters_per_user))
-        .select(
-            *group_cols,
-            "group_id",
-            "key",
-            F.col("hits_out").alias("hits"),
-            "filters_hit",
-            "flattened",
-            duckdb_round(est_clients_for_hits, 2).alias("est_key_clients"),
-            "n_rows",
-            "est_clients",
-            "est_items",
-            "total_bits_set",
-        )
+    wide = probed.withColumns({
+        "est_key_clients": duckdb_round(est_clients_for_hits, 2),
+        "hits_by_all_hostnames": F.col("hits").cast("int"),
+    })
+    key_df = wide.filter(F.col("kind") == "key").select(
+        *group_cols, "group_id", "key", "hits", "filters_hit", "flattened",
+        "est_key_clients", "n_rows", "est_clients", "est_items",
+        "total_bits_set",
     )
+    group_df = wide.filter(F.col("kind") == "group").select(
+        *group_cols, "group_id", "flattened", "hits_by_all_hostnames"
+    )
+    # the renderers collect `wide` once instead of each projection
+    # (every collect of a projection re-runs the pass)
+    key_df._search_pass = group_df._search_pass = wide
     return key_df, group_df
 
 
+def _search_rows(key_df: DataFrame, group_df: DataFrame):
+    """-> (key rows, group rows, general-information rows or None), as
+    dicts with the frames' columns.  Frames from one `run_search` are
+    split out of a single collect of their shared pass; other frames
+    are collected as they are."""
+    wide = getattr(key_df, "_search_pass", None)
+    if wide is None or wide is not getattr(group_df, "_search_pass", None):
+        keys, groups = key_df.collect(), group_df.collect()
+        return [r.asDict() for r in keys], [r.asDict() for r in groups], None
+    rows: dict = {"key": [], "group": [], "info": []}
+    for r in wide.collect():
+        rows[r["kind"]].append(r)
+    return (
+        [{c: r[c] for c in key_df.columns} for r in rows["key"]],
+        [{c: r[c] for c in group_df.columns} for r in rows["group"]],
+        rows["info"],
+    )
+
+
 def general_information(
-    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
+    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str],
+    info_rows: "list | None" = None,
 ) -> list[dict]:
     """The reference search result's leading "general information" block
     (src/bin/honas_search.c:88-127): state metadata + per-filter stats.
 
-    One dict per sketch row (state).  The collect is bounded: one row per
-    group (windows x entities), never per input key."""
-    from .operators.sketch_agg import finalize_stats, per_filter_stats
-
-    group_cols = list(group_cols)
-    stats = finalize_stats(sketch_df, spec, group_cols).collect()
-    pf = per_filter_stats(sketch_df, spec, group_cols).collect()
-    by_group: dict[tuple, list] = {}
-    for r in pf:
-        by_group.setdefault(tuple(r[c] for c in group_cols), []).append(
-            (
-                r["filter_index"],
-                {
-                    "number_of_bits_set": r["number_of_bits_set"],
-                    "estimated_number_of_host_names": r[
-                        "estimated_number_of_host_names"
-                    ],
-                    "actual_false_positive_rate": "%.10f"
-                    % r["actual_false_positive_rate"],
-                },
-            )
-        )
+    One dict per sketch row (state), rendered from the "info" rows of a
+    `search_probe` pass — `info_rows` when the caller already collected
+    them, else an empty-job pass over `sketch_df`.  The collect is
+    bounded: one row per group (windows x entities), never per key."""
+    if info_rows is None:
+        info_rows = search_probe(sketch_df, spec, [], group_cols).collect()
     out = []
-    for r in stats:
-        gkey = tuple(r[c] for c in group_cols)
+    for r in info_rows:
         info = {c: r[c] for c in group_cols}
         info.update(
             first_request=r["first_ts"],
@@ -309,12 +273,23 @@ def general_information(
             number_of_hashes=spec.k,
             number_of_bits_per_filter=spec.m_bits,
             flatten_threshold=spec.flatten_threshold,
-            filters=[
-                d for _, d in sorted(by_group.get(gkey, []))
-            ],
+            filters=[_filter_stats(spec, b) for b in r["filter_bits"]],
         )
         out.append(info)
     return out
+
+
+def _filter_stats(spec: SketchSpec, bits_set: int) -> dict:
+    """One entry of the reference's per-filter array
+    (honas_search.c:113-124), FPR as its "%.10f" string."""
+    return {
+        "number_of_bits_set": int(bits_set),
+        "estimated_number_of_host_names": int(
+            K.bloom_approx_count(spec.m_bits, spec.k, int(bits_set))
+        ),
+        "actual_false_positive_rate": "%.10f"
+        % K.actual_fpr(spec.m_bits, spec.k, int(bits_set)),
+    }
 
 
 def search_result_json_reference(
@@ -344,7 +319,6 @@ def search_result_json_reference(
     key_df/group_df come from `run_search` over the imported state (the
     engine path — this is a sink, not a second implementation); `header`
     is the .hs header dict from `import_hs_state`."""
-    from . import kernels as K
     from honas_spark import __version__
 
     doc: dict = {
@@ -367,15 +341,7 @@ def search_result_json_reference(
         "number_of_bits_per_filter": spec.m_bits,
         "flatten_threshold": spec.flatten_threshold,
         "filters": [
-            {
-                "number_of_bits_set": int(b),
-                "estimated_number_of_host_names": int(
-                    K.bloom_approx_count(spec.m_bits, spec.k, int(b))
-                ),
-                "actual_false_positive_rate": "%.10f"
-                % K.actual_fpr(spec.m_bits, spec.k, int(b)),
-            }
-            for b in header["filter_bits_set"]
+            _filter_stats(spec, b) for b in header["filter_bits_set"]
         ],
         "flattened_results": bool(
             int(
@@ -386,12 +352,13 @@ def search_result_json_reference(
             < spec.flatten_threshold
         ),
     }
+    key_rows, group_rows, _ = _search_rows(key_df, group_df)
     by_gid: dict = {}
-    for r in key_df.collect():
+    for r in key_rows:
         by_gid.setdefault(r["group_id"], {})[r["key"]] = int(r["hits"])
     groups = []
     for r in sorted(
-        group_df.collect(),
+        group_rows,
         key=lambda x: (x["group_id"] is None, x["group_id"]),
     ):
         gid = r["group_id"]
@@ -414,13 +381,14 @@ def search_result_json(
 ) -> str:
     """S5 sink: render the search result as the reference's JSON shape.
     When sketch_df+spec are given, the result leads with the per-state
-    general-information block like the reference (honas_search.c:88-127)."""
-    keys = [r.asDict() for r in key_df.collect()]
-    groups = [r.asDict() for r in group_df.collect()]
+    general-information block like the reference (honas_search.c:88-127),
+    taken from the same single collect as the key and group rows when
+    key_df/group_df come from `run_search` over sketch_df."""
+    keys, groups, info_rows = _search_rows(key_df, group_df)
     result: dict = {}
     if sketch_df is not None and spec is not None:
         result["general_information"] = general_information(
-            sketch_df, spec, group_cols
+            sketch_df, spec, group_cols, info_rows
         )
     result["hostnames"] = keys
     result["groups"] = groups

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+def _remove_file(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -27,6 +34,9 @@ def ship_package(spark: SparkSession) -> None:
                     if fn.endswith(".py"):
                         full = os.path.join(dirpath, fn)
                         z.write(full, os.path.relpath(full, root))
+        # served to executors for as long as any session of this
+        # process runs, so it goes only when the process exits
+        atexit.register(_remove_file, zpath)
     spark.sparkContext.addPyFile(zpath)
 
 

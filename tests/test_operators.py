@@ -1818,6 +1818,64 @@ def test_gopher_rules_integer_verdicts(spark):
     assert got[5][4] is False and got[5][0] is False   # mean length
 
 
+def test_gopher_alpha_count_matches_token_scan(spark):
+    """n_alpha_words counts the whitespace tokens holding an ASCII
+    letter: it must equal the straightforward per-token regex count
+    on ordinary text (tabs, newlines, digits, punctuation, non-ASCII
+    letters, empty and NULL documents)."""
+    from honas_spark.operators.quality import gopher_rules
+
+    texts = [
+        "the quick brown fox",
+        "  leading and trailing\tspaces\n",
+        "123 456 a1 1a 1a1 ... ### x",
+        "caf\u00e9 na\u00efve \u00fcber 42 \u00e9\u00e9 z",
+        "!!! ??? -- a--b (c) [1] {2}",
+        "",
+        "\t\n  \r ",
+        "mixed\tTAB\nNEWLINE 9\x0b9 end.",
+        None,
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: r["n_alpha_words"]
+        for r in gopher_rules(docs, "doc_id", "text").collect()
+    }
+    want = {
+        r["doc_id"]: r["n"]
+        for r in docs.select(
+            "doc_id",
+            F.regexp_count("text", F.lit(r"\S*[a-zA-Z]\S*")).alias("n"),
+        ).collect()
+    }
+    assert got == want
+
+
+def test_gopher_rules_linear_on_huge_letter_free_token(spark):
+    """A 120 KB letter-free token must not make the alphabetic-word
+    count backtrack quadratically (the old \\S*[a-zA-Z]\\S* form took
+    9 s on a 40 KB token and grows with the square of its length)."""
+    import time
+
+    from honas_spark.operators.quality import gopher_rules
+
+    docs = spark.createDataFrame(
+        [(1, "the " + "7" * 120_000 + " and words end"),
+         (2, "-" * 150_000)],
+        "doc_id long, text string",
+    )
+    t0 = time.perf_counter()
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_alpha_words"])
+        for r in gopher_rules(docs, "doc_id", "text").collect()
+    }
+    elapsed = time.perf_counter() - t0
+    assert got == {1: (5, 4), 2: (1, 0)}
+    assert elapsed < 60, elapsed
+
+
 def test_pq_roundtrip_recall_and_compression(spark):
     """PQ codes: encode is deterministic, ADC top-k recovers the exact
     neighbors on well-separated clusters, and the code width is m."""

@@ -344,3 +344,40 @@ def test_build_modes_bit_identical_under_skew(spark):
             for col in ("filters", "hll_clients", "hll_items", "cms",
                         "n_rows", "first_ts", "last_ts"):
                 assert other[w][col] == base[w][col], (name, w, col)
+
+
+def test_build_client_col_that_is_also_a_group_col(spark):
+    """Per-repo sketches keyed AND client-hashed by the same column: the
+    slim projection must carry that column once (a duplicated column
+    broke the worker's pandas groupby), and the result must equal a
+    build whose client column is a separate copy."""
+    from honas_spark import kernels as K
+
+    spec = SketchSpec(m_bits=1 << 12, k=3, num_filters=2, cms_width=64,
+                      kll_k=32)
+    df = sha256_key(
+        spark.createDataFrame(
+            [("r1", "a/x"), ("r1", "b/y"), ("r2", "a/x"), ("r3", "c/z")],
+            "repo string, path string",
+        ),
+        "path",
+    )
+    same = {
+        r["repo"]: r
+        for r in build_sketches(df, spec, ["repo"], client_col="repo")
+        .collect()
+    }
+    copy = {
+        r["repo"]: r
+        for r in build_sketches(
+            df.withColumn("client", F.col("repo")), spec, ["repo"],
+            client_col="client",
+        ).collect()
+    }
+    assert {k: r["n_rows"] for k, r in same.items()} == {
+        "r1": 2, "r2": 1, "r3": 1
+    }
+    for k, r in same.items():
+        assert K.hll_count(K.hll_unpack(r["hll_clients"])) == 1
+        for c in ("filters", "hll_clients", "hll_items", "cms"):
+            assert r[c] == copy[k][c], (k, c)

@@ -391,3 +391,54 @@ def test_grouped_scatter_and_u8_fastpath_bit_identical():
     # and the pack round-trips through the unchanged decoder
     sp = K.hll_pack(mats[0])
     assert np.array_equal(K.hll_unpack(sp), mats[0])
+
+
+def test_bulk_flush_states_do_not_pin_scatter_scratch(spark, monkeypatch):
+    """A state created by a bulk flush that more input may follow must
+    own its HLL/CMS arrays: a view into the grouped-scatter scratch
+    matrices keeps the whole (groups x registers) scratch alive for the
+    rest of the partition."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    from honas_spark import kernels as K
+    from honas_spark.operators import sketch_agg as SA
+    from honas_spark.spec import SketchSpec
+
+    spec = SketchSpec(m_bits=1 << 12, k=3, num_filters=2, cms_width=64,
+                      kll_k=32)
+    pdf = pd.DataFrame(
+        [
+            (f"g{i % 5}", hashlib.sha256(str(i).encode()).digest(),
+             f"c{i % 7}")
+            for i in range(140_000)  # > one 131,072-row flush
+        ],
+        columns=["g", "key_sha", "client"],
+    )
+    df = spark.createDataFrame(pdf.head(10))
+    # run the build's partition function driver-side, recording the
+    # scratch matrices it scatters into and the states it emits
+    fns, scratch, states = [], [], []
+    monkeypatch.setattr(
+        type(df), "mapInPandas",
+        lambda self, fn, schema: fns.append(fn) or self,
+    )
+    for name in ("hll_add_grouped", "cms_add_grouped"):
+        def record(mat, *a, _real=getattr(K, name)):
+            scratch.append(mat)
+            return _real(mat, *a)
+        monkeypatch.setattr(K, name, record)
+    to_pdf = SA._states_to_pdf
+    monkeypatch.setattr(
+        SA, "_states_to_pdf",
+        lambda st, gc: states.extend(st.values()) or to_pdf(st, gc),
+    )
+    SA.build_sketches(df, spec, ["g"], client_col="client",
+                      mode="shuffle_keys")
+    (out,) = list(fns[0](iter([pdf[:70_000], pdf[70_000:]])))
+    assert len(out) == len(states) == 5 and len(scratch) == 3
+    for st in states:
+        for arr in (st.hll_items, st.hll_clients, st.cms):
+            assert not any(np.shares_memory(arr, m) for m in scratch)
