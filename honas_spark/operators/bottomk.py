@@ -1,39 +1,29 @@
 """Bottom-k distinct SAMPLE — the eighth mergeable sketch sibling.
 
-Where the theta/KMV sibling (operators/theta.py) keeps only the k
-minimum HASHES (cardinality algebra), this one keeps the VALUES riding
-on those hashes: a uniform, mergeable sample over the DISTINCT value
-set of each group (Cohen & Kaplan, "Summarizing data using bottom-k
-sketches", PODC 2007).  The reference has no sampling operator at all —
-its closest notion is the dry-run advice counters; this sibling is what
-a 100 TB corpus needs to eyeball "which distinct user ids / tokens does
-this slice actually contain" without a full distinct shuffle.
+Where theta/KMV (operators/theta.py) keeps only the k minimum HASHES,
+this keeps the VALUES riding on them: a uniform, mergeable sample over
+each group's DISTINCT value set (Cohen & Kaplan, "Summarizing data using
+bottom-k sketches", PODC 2007) — "which distinct user ids does this
+slice contain" without a full distinct shuffle.
 
-Same protocol as Bloom/HLL/CMS/KLL/t-digest/MG/theta: values hash
-JVM-side (whole-stage codegen), one partial bottom-k per (partition,
-group) via mapInPandas — only P x k (hash, value) pairs per group ever
-shuffle, never the raw rows — then an associative per-group merge
-(union, unique by hash, keep k smallest).  Merging any split of the
-data yields the identical sample: the k globally-smallest hashes win
-regardless of partitioning, which also makes the sample itself
-deterministic and cross-engine verifiable under the portable md5
-family.
-
-est_distinct rides along for free: the k-th smallest hash IS a KMV
-cardinality estimator ((k-1) * range / h_k, ~1/sqrt(k) relative error;
-exact below k distinct).
+A `two_phase_agg` family: values hash JVM-side, only P x k (hash, value)
+pairs per group shuffle, and the merge (union, unique by hash, keep k
+smallest) is associative — the k globally-smallest hashes win under any
+split, so the sample is deterministic and, under the portable md5
+family, cross-engine verifiable.  est_distinct rides along: the k-th
+smallest hash IS a KMV estimator ((k-1) * range / h_k; exact below k).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+import json
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .common import na_safe_key
-from .sketch_agg import _group_fields_ddl
+from .two_phase import Family, two_phase_agg
 
 _MD5_PREFIX_RANGE = 16 ** 15  # 60-bit prefix, always positive in int64
 
@@ -49,10 +39,17 @@ def _hash_col(value_col: str, hash_fn: str):
 
 def _bottomk(hs: np.ndarray, vs: np.ndarray, k: int):
     """k smallest distinct hashes (uint64 order) + their values."""
-    u = hs.view(np.uint64)
-    _, idx = np.unique(u, return_index=True)  # sorted ascending, first hit
-    idx = idx[:k]
-    return hs[idx], vs[idx]
+    _, idx = np.unique(hs.view(np.uint64), return_index=True)  # first hit
+    return hs[idx[:k]], vs[idx[:k]]
+
+
+def _pack(state) -> bytes:
+    return json.dumps([state[0].tolist(), state[1].tolist()]).encode()
+
+
+def _unpack(buf: bytes):
+    hs, vs = json.loads(buf)
+    return np.array(hs, dtype=np.int64), np.array(vs, dtype=object)
 
 
 def bottomk_sample_agg(
@@ -63,79 +60,45 @@ def bottomk_sample_agg(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """-> one row per group: `sample` (array<string>, the bottom-k
-    distinct values in hash order — a uniform sample of the group's
-    distinct set), `n_sample` (int) and `est_distinct` (long; exact
-    while the group holds < k distinct values).
-
-    Values are sampled AS STRINGS (the cast also feeds the hash), so
-    one sketch type serves any value column; keep ids/keys if the
-    original type matters downstream."""
+    distinct values in hash order), `n_sample` (int) and `est_distinct`
+    (long; exact while the group holds < k distinct values).  Values
+    are sampled AS STRINGS (the cast also feeds the hash).  NULL values
+    are skipped; a group of only NULLs gets an empty sample, estimate 0."""
     if k < 2:
         raise ValueError(f"k must be >= 2: {k}")
-    group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
-    mid_schema = f"{group_ddl}, hs array<long>, vs array<string>"
     hash_range = _MD5_PREFIX_RANGE if hash_fn == "md5" else 2 ** 64
-    hashed = df.select(
-        *group_cols,
-        _hash_col(value_col, hash_fn).alias("_h"),
-        F.col(value_col).cast("string").alias("_v"),
-    )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(
-                group_cols, sort=False, dropna=False
-            ):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                hs = sub["_h"].to_numpy(dtype=np.int64)
-                vs = sub["_v"].to_numpy(dtype=object)
-                if gkey in states:
-                    ph, pv = states[gkey]
-                    hs = np.concatenate([ph, hs])
-                    vs = np.concatenate([pv, vs])
-                states[gkey] = _bottomk(hs, vs, k)
-        if states:
-            rows: dict = {c: [] for c in group_cols}
-            rows["hs"] = []
-            rows["vs"] = []
-            for gkey, (hs, vs) in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["hs"].append(hs.tolist())
-                rows["vs"].append(list(vs))
-            yield pd.DataFrame(rows)
-
-    partials = hashed.mapInPandas(build, schema=mid_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        hs = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in pdf["hs"]]
+    def merge(a, b):
+        return _bottomk(
+            np.concatenate([a[0], b[0]]), np.concatenate([a[1], b[1]]), k
         )
-        vs = np.concatenate(
-            [np.asarray(list(x), dtype=object) for x in pdf["vs"]]
-        )
-        hs, vs = _bottomk(hs, vs, k)
+
+    def update(st, hs, vs):
+        ok = pd.notna(vs)
+        return merge(st, (hs[ok], vs[ok]))
+
+    def finalize(st) -> dict:
+        hs, vs = st
+        est = hs.size
         if hs.size >= k:
             kth = int(hs.view(np.uint64)[-1])
             est = int(round((k - 1) * float(hash_range) / float(max(kth, 1))))
-        else:
-            est = int(hs.size)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["sample"] = [list(vs)]
-        out["n_sample"] = [int(hs.size)]
-        out["est_distinct"] = [est]
-        return pd.DataFrame(out)
+        return {"sample": list(vs), "n_sample": int(hs.size),
+                "est_distinct": est}
 
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge,
-        schema=(
-            f"{group_ddl}, sample array<string>,"
-            " n_sample int, est_distinct long"
-        ),
+    family = Family(
+        zero=lambda: (np.empty(0, np.int64), np.empty(0, object)),
+        update=update,
+        merge=merge,
+        to_bytes=_pack,
+        from_bytes=_unpack,
+        finalize=finalize,
+    )
+    # a NULL value's hash (xxhash64's seed, md5's NULL) is masked in
+    # `update`; coalesce keeps the md5 column int64 through Arrow
+    inputs = [F.coalesce(_hash_col(value_col, hash_fn), F.lit(0)),
+              F.col(value_col).cast("string")]
+    return two_phase_agg(
+        df, group_cols, inputs, family,
+        "sample array<string>, n_sample int, est_distinct long",
     )

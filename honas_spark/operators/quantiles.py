@@ -1,29 +1,39 @@
-"""Generic distributed quantile-sketch aggregation — KLL or t-digest per
-group over a numeric column, with the same two-phase map-combine plan as
-the main sketch build (one partial per (partition, group), tree merge).
-
-This is the standalone face of the shared `zero/update/merge/finalize`
-protocol the north rule asks for: the same operator shape serves every
-sketch family."""
+"""Quantile sketches per group — KLL, t-digest or DDSketch, each a
+`two_phase_agg` family from one table; `quantile_sketch_agg` and
+`ddsketch_agg` differ only in `finalize`."""
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import na_safe_key
-from .sketch_agg import _group_fields_ddl
+from .two_phase import Family, two_phase_agg
 
+# sketch name -> constructor from the operator's param
 _FAMILIES = {
-    "kll": (lambda p: K.KLL(p), K.KLL.from_bytes),
-    "tdigest": (lambda p: K.TDigest(p), K.TDigest.from_bytes),
+    "kll": K.KLL,
+    "tdigest": K.TDigest,
     # param is 1/alpha: param=100 -> 1% relative-error guarantee
-    "ddsketch": (lambda p: K.DDSketch(1.0 / p), K.DDSketch.from_bytes),
+    "ddsketch": lambda p: K.DDSketch(1.0 / p),
 }
+
+
+def _add(st, values):
+    st.add(values)  # NULL arrives as NaN, which every sketch drops
+    return st
+
+
+def _family(make, finalize) -> Family:
+    return Family(
+        zero=make,
+        update=_add,
+        merge=lambda a, b: a.merge(b),
+        to_bytes=lambda st: st.to_bytes(),
+        from_bytes=type(make()).from_bytes,
+        finalize=finalize,
+    )
 
 
 def quantile_sketch_agg(
@@ -34,58 +44,15 @@ def quantile_sketch_agg(
     param: int = 100,
     quantiles: Sequence[float] = (0.25, 0.5, 0.75, 0.99),
 ) -> DataFrame:
-    """-> one row per group: the serialized sketch + requested quantile
-    estimates (q_25, q_50, ... columns, rounded to 6dp)."""
-    group_cols = list(group_cols)
-    make, from_bytes = _FAMILIES[sketch]
-    group_ddl = _group_fields_ddl(df, group_cols)
-    qcols = [f"q_{int(q * 100)}" for q in quantiles]
-    mid_schema = f"{group_ddl}, sketch binary, n long"
-    out_schema = (
-        f"{group_ddl}, n long, "
-        + ", ".join(f"{c} double" for c in qcols)
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, object] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                st = states.get(gkey)
-                if st is None:
-                    st = states[gkey] = make(param)
-                st.add(sub[value_col].to_numpy(dtype=np.float64))
-        if states:
-            rows = {c: [] for c in group_cols}
-            rows.update(sketch=[], n=[])
-            for gkey, st in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["sketch"].append(st.to_bytes())
-                rows["n"].append(st.n)
-            yield pd.DataFrame(rows)
-
-    partials = df.select(*group_cols, value_col).mapInPandas(
-        build, schema=mid_schema
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["sketch"]:
-            st = from_bytes(blob)
-            merged = st if merged is None else merged.merge(st)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["n"] = [merged.n]
-        for q, c in zip(quantiles, qcols):
-            out[c] = [round(merged.quantile(q), 6)]
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge, schema=out_schema
+    """-> one row per group: `n` + requested quantile estimates (q_25,
+    q_50, ... columns, rounded to 6dp)."""
+    qcols = {f"q_{int(q * 100)}": q for q in quantiles}
+    family = _family(lambda: _FAMILIES[sketch](param), lambda st: {
+        "n": st.n, **{c: round(st.quantile(q), 6) for c, q in qcols.items()}
+    })
+    return two_phase_agg(
+        df, group_cols, [F.col(value_col)], family,
+        "n long, " + ", ".join(f"{c} double" for c in qcols),
     )
 
 
@@ -103,63 +70,18 @@ def ddsketch_agg(
     exact cross-engine oracle.  Output per group: n, then for each
     requested quantile the bucket index `b_XX` (integer, hard signal)
     and the canonical value estimate `q_XX` = 2*gamma^j/(gamma+1)
-    rounded to 4dp.
+    rounded to 4dp."""
+    tags = {int(q * 100): q for q in quantiles}
 
-    Plan shape: same two-phase map-combine as every other sketch family
-    (one partial per (partition, group), counter-add tree merge) — raw
-    values never shuffle, only (bucket, count) pairs do, at most
-    max_buckets longs per partial.
-    """
-    group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
-    bcols = [f"b_{int(q * 100)}" for q in quantiles]
-    qcols = [f"q_{int(q * 100)}" for q in quantiles]
-    mid_schema = f"{group_ddl}, sketch binary, n long"
-    out_schema = (
-        f"{group_ddl}, n long, "
-        + ", ".join(f"{b} long, {q} double" for b, q in zip(bcols, qcols))
-    )
+    def finalize(st) -> dict:
+        out = {"n": st.n}
+        for t, q in tags.items():
+            out[f"b_{t}"] = st.quantile_bucket(q)
+            out[f"q_{t}"] = round(st.quantile(q), 4)
+        return out
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, K.DDSketch] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                st = states.get(gkey)
-                if st is None:
-                    st = states[gkey] = K.DDSketch(alpha, max_buckets)
-                st.add(sub[value_col].to_numpy(dtype=np.float64))
-        if states:
-            rows = {c: [] for c in group_cols}
-            rows.update(sketch=[], n=[])
-            for gkey, st in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["sketch"].append(st.to_bytes())
-                rows["n"].append(st.n)
-            yield pd.DataFrame(rows)
-
-    partials = df.select(*group_cols, value_col).mapInPandas(
-        build, schema=mid_schema
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["sketch"]:
-            st = K.DDSketch.from_bytes(blob)
-            merged = st if merged is None else merged.merge(st)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["n"] = [merged.n]
-        for q, b, c in zip(quantiles, bcols, qcols):
-            j = merged.quantile_bucket(q)
-            out[b] = [j]
-            out[c] = [round(merged.quantile(q), 4)]
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge, schema=out_schema
+    return two_phase_agg(
+        df, group_cols, [F.col(value_col)],
+        _family(lambda: K.DDSketch(alpha, max_buckets), finalize),
+        "n long, " + ", ".join(f"b_{t} long, q_{t} double" for t in tags),
     )

@@ -13,16 +13,12 @@ as a two-phase Spark aggregation designed for 100 TB inputs:
       (This is the explicit two-phase partial aggregation the survey calls
       for — pandas GROUPED_AGG UDAFs cannot spill or tree-merge partials.)
 
-  Phase 2 (tree merge):
-      .groupBy(group_cols).applyInPandas(merge_partials) — reduces the few
-      partial rows per group with the CRDT algebra (bitwise OR / register
-      max / counter add; reference merge src/honas_state.c:568-611).
+  Phase 2 (merge):
+      .repartition(group_cols).mapInPandas(_merge_by_group) — reduces the
+      few partial rows per group with the CRDT algebra (bitwise OR /
+      register max / counter add; reference merge
+      src/honas_state.c:568-611), one Python invocation per partition.
       Associativity (property-tested) makes the merge order irrelevant.
-
-An optional `salt_partitions` pre-repartition spreads *input* rows evenly
-before phase 1 when the source partitioning itself is pathological (e.g.
-one parquet file holding one giant repo) — correctness is unaffected
-because the algebra is idempotent/commutative.
 
 Window rotation (honas gather.c:899-920, 1302-1351) is expressed as
 epoch-aligned tumbling windows: `F.window(ts, spec.window)` — identical
@@ -41,9 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import na_safe_key
 from ..spec import SketchSpec
 from ..state import SketchState
+from .two_phase import _group_fields_ddl, segment
 
 SKETCH_VALUE_FIELDS = (
     "filters binary, hll_clients binary, hll_items binary, cms binary,"
@@ -54,11 +50,6 @@ STATS_FIELDS = (
     "total_bits_set long, est_items long, est_clients long,"
     " est_items_per_filter long, fill_rate double, actual_fpr double"
 )
-
-
-def _group_fields_ddl(df: DataFrame, group_cols: Sequence[str]) -> str:
-    schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return ", ".join(f"{c} {schema[c]}" for c in group_cols)
 
 
 def with_window(df: DataFrame, ts_col: str, period: str,
@@ -124,7 +115,6 @@ def build_sketches(
     client_col: Optional[str] = None,
     ts_col: Optional[str] = None,
     value_col: Optional[str] = None,
-    salt_partitions: Optional[int] = None,
     mode: str = "map_combine",
     salt: Optional[int] = None,
     client_hash_col: Optional[str] = None,
@@ -200,10 +190,6 @@ def build_sketches(
             ).repartition(*group_cols, "_salt").drop("_salt")
         else:
             slim = slim.repartition(*group_cols)
-    elif salt_partitions:
-        # spread pathological input partitioning; idempotent algebra makes
-        # any row placement correct
-        slim = slim.repartition(salt_partitions)
 
     # total buffered-row cap between bulk flushes: bounds worker
     # memory by TOTAL rows (the previous per-GROUP cap bounded no
@@ -260,19 +246,8 @@ def build_sketches(
                 if components is None
                 else components
             )
-            gb = big.groupby(group_cols, sort=False, dropna=False)
-            gnum = gb.ngroup().to_numpy()
-            G = int(gnum.max()) + 1
-            order = np.argsort(gnum, kind="stable")
-            codes = gnum[order]
-            seg = np.searchsorted(codes, np.arange(G + 1))
-            gcol_arrays = {c: big[c].to_numpy() for c in group_cols}
-            groups = [
-                na_safe_key(tuple(
-                    gcol_arrays[c][order[seg[g]]] for c in group_cols
-                ))
-                for g in range(G)
-            ]
+            gb, order, codes, seg, groups = segment(big, group_cols)
+            G = len(groups)
             n_all = len(big)
             limbs = item_h64 = None
             if comp & {"bloom", "hll", "cms"}:
@@ -591,28 +566,18 @@ def _merge_by_group(spec: SketchSpec, group_cols: list):
             # sort=False both ngroup() numbering and the agg row order
             # are first-appearance order, so stats row g belongs to
             # group code g by construction.
-            gb = pdf.groupby(group_cols, sort=False, dropna=False)
+            gb, order, _, seg, keys = segment(pdf, group_cols)
             stats = gb.agg(
                 _first=("first_ts", "min"),
                 _last=("last_ts", "max"),
                 _n=("n_rows", "sum"),
             )
-            gnum = gb.ngroup().to_numpy()
-            n_groups = len(stats)
-            order = np.argsort(gnum, kind="stable")
-            seg = np.searchsorted(
-                gnum[order], np.arange(n_groups + 1)
-            )
             cols = {c: pdf[c].to_numpy() for c in value_cols}
-            gcols = {c: pdf[c].to_numpy() for c in group_cols}
             firsts = stats["_first"].to_numpy()
             lasts = stats["_last"].to_numpy()
             ns = stats["_n"].to_numpy()
-            for g in range(n_groups):
+            for g, gkey in enumerate(keys):
                 idx = order[seg[g]: seg[g + 1]]
-                gkey = na_safe_key(
-                    tuple(gcols[c][idx[0]] for c in group_cols)
-                )
                 # vectorized reduce over the group's rows (one numpy
                 # reduction per component, not one merge per row)
                 st = SketchState.merge_packed(

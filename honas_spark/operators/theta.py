@@ -1,22 +1,15 @@
 """Theta/KMV distinct sketch aggregation + set operations across groups.
 
 The reference approximates "how many keys hit in BOTH filters" only at
-search time via the hit-bitmap AND (src/bin/honas_search.c:303-314);
-this sibling makes union AND intersection cardinality first-class over
-any grouping — "distinct part keys shared by window A and B" — under
-the same zero/update/merge/finalize protocol as the Bloom/HLL/CMS/KLL
-/t-digest/MG families (kernels.kmv_*).
-
-Plan shape: values hash JVM-side (xxhash64, whole-stage codegen) so the
-Python path only folds already-hashed longs; one partial sketch per
-(partition, group) via mapInPandas; tree merge per group.  A sketch row
-is <= 8k bytes, so the pairwise set-operation stage joins the
-G-row sketch table against itself broadcast — never the raw data.
+search time (hit-bitmap AND, src/bin/honas_search.c:303-314); this makes
+union, intersection and difference cardinality first-class over any
+grouping.  `theta_sketch_agg` is a `two_phase_agg` family over values
+hashed JVM-side (xxhash64); a sketch row is <= 8k bytes, so the pairwise
+stage self-joins the G-row sketch table broadcast — never the raw data.
 """
 
 from __future__ import annotations
 
-from itertools import combinations
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -24,8 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import na_safe_key
-from .sketch_agg import _group_fields_ddl
+from .two_phase import Family, two_phase_agg
 
 
 def theta_sketch_agg(
@@ -36,51 +28,23 @@ def theta_sketch_agg(
 ) -> DataFrame:
     """-> one row per group: `sketch` (serialized KMV state) and
     `est_distinct` (long; exact while the group has < k distinct
-    values, ~1/sqrt(k) relative error beyond)."""
-    group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
-    mid_schema = f"{group_ddl}, sketch binary"
-    hashed = df.select(
-        *group_cols, F.xxhash64(F.col(value_col)).alias("_h")
+    values, ~1/sqrt(k) relative error beyond).  NULL values are not
+    counted; a group holding only NULLs estimates 0."""
+    v = F.col(value_col)
+    family = Family(
+        zero=K.kmv_zero,
+        update=lambda st, h, ok: K.kmv_update(st, h[ok].view(np.uint64), k),
+        merge=lambda a, b: K.kmv_merge(a, b, k),
+        to_bytes=K.kmv_pack,
+        from_bytes=K.kmv_unpack,
+        finalize=lambda st: {
+            "sketch": K.kmv_pack(st),
+            "est_distinct": int(round(K.kmv_estimate(st, k))),
+        },
     )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, np.ndarray] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(
-                group_cols, sort=False, dropna=False
-            ):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                h = sub["_h"].to_numpy(dtype=np.int64).view(np.uint64)
-                states[gkey] = K.kmv_update(
-                    states.get(gkey, K.kmv_zero()), h, k
-                )
-        if states:
-            rows: dict = {c: [] for c in group_cols}
-            rows["sketch"] = []
-            for gkey, st in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["sketch"].append(K.kmv_pack(st))
-            yield pd.DataFrame(rows)
-
-    partials = hashed.mapInPandas(build, schema=mid_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = K.kmv_zero()
-        for blob in pdf["sketch"]:
-            m = K.kmv_merge(m, K.kmv_unpack(blob), k)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["sketch"] = [K.kmv_pack(m)]
-        out["est_distinct"] = [int(round(K.kmv_estimate(m, k)))]
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge, schema=f"{group_ddl}, sketch binary, est_distinct long"
+    return two_phase_agg(
+        df, group_cols, [F.xxhash64(v), v.isNotNull()], family,
+        "sketch binary, est_distinct long",
     )
 
 
@@ -92,53 +56,34 @@ def theta_pair_ops(
     """All unordered group pairs of a `theta_sketch_agg` output ->
     (group_a..., group_b..., est_intersect, est_union, est_diff_ab,
     est_diff_ba) as longs (exact while both sketches are exact;
-    est_diff_ab = |A \\ B|).  The G-row sketch table self-joins with
-    the _b side BROADCAST: G*(G-1)/2 pair rows of <= 16k sketch bytes
-    each, never the raw data."""
+    est_diff_ab = |A \\ B|): G*(G-1)/2 pairs of broadcast sketch rows,
+    never the raw data."""
     group_cols = list(group_cols)
     dtypes = dict(sketches.dtypes)
-    a = sketches.select(
-        *[F.col(c).alias(f"{c}_a") for c in group_cols],
-        F.col("sketch").alias("_sk_a"),
-    )
-    b = sketches.select(
-        *[F.col(c).alias(f"{c}_b") for c in group_cols],
-        F.col("sketch").alias("_sk_b"),
-    )
-    cond = F.struct(*[F.col(f"{c}_a") for c in group_cols]) < F.struct(
-        *[F.col(f"{c}_b") for c in group_cols]
-    )
-    pairs = a.join(F.broadcast(b), cond)
-    out_ddl = (
-        ", ".join(
-            f"{c}_{s} {dtypes[c]}"
-            for s in ("a", "b")
-            for c in group_cols
-        )
-        + ", est_intersect long, est_union long"
-        + ", est_diff_ab long, est_diff_ba long"
+    a, b = (sketches.select(*[F.col(c).alias(f"{c}_{s}") for c in group_cols],
+                            F.col("sketch").alias(f"_sk_{s}")) for s in "ab")
+    gcols = [f"{c}_{s}" for s in ("a", "b") for c in group_cols]
+    n = len(group_cols)
+    pairs = a.join(F.broadcast(b), F.struct(*gcols[:n]) < F.struct(*gcols[n:]))
+    ests = ["est_intersect", "est_union", "est_diff_ab", "est_diff_ba"]
+    out_ddl = ", ".join(
+        [f"{c} {dtypes[c[:-2]]}" for c in gcols] + [f"{e} long" for e in ests]
     )
 
     def ops(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            inter, uni, dab, dba = [], [], [], []
+            est = []
             for sa, sb in zip(pdf["_sk_a"], pdf["_sk_b"]):
                 va, vb = K.kmv_unpack(sa), K.kmv_unpack(sb)
-                inter.append(int(round(K.kmv_intersect_estimate(va, vb, k))))
-                uni.append(int(round(K.kmv_union_estimate(va, vb, k))))
-                dab.append(int(round(K.kmv_diff_estimate(va, vb, k))))
-                dba.append(int(round(K.kmv_diff_estimate(vb, va, k))))
-            out = {
-                f"{c}_{s}": pdf[f"{c}_{s}"]
-                for s in ("a", "b")
-                for c in group_cols
-            }
-            out["est_intersect"] = inter
-            out["est_union"] = uni
-            out["est_diff_ab"] = dab
-            out["est_diff_ba"] = dba
-            yield pd.DataFrame(out)
+                est.append([
+                    K.kmv_intersect_estimate(va, vb, k),
+                    K.kmv_union_estimate(va, vb, k),
+                    K.kmv_diff_estimate(va, vb, k),
+                    K.kmv_diff_estimate(vb, va, k),
+                ])
+            est = np.round(np.array(est)).astype(np.int64).T
+            yield pdf[gcols].assign(**dict(zip(ests, est)))
 
     return pairs.mapInPandas(ops, schema=out_ddl)

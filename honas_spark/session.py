@@ -40,12 +40,29 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def machine_defaults() -> tuple[int, str]:
+    """(cores, driver memory) of a local session: SPARK_GRAFT_CPUS and
+    SPARK_DRIVER_MEM when set, else the CPUs this process may run on
+    and a quarter of physical memory with a 1 GB floor."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cores = int(cpus) if cpus else len(os.sched_getaffinity(0))
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        with open("/proc/meminfo") as f:
+            kb = next(
+                int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:")
+            )
+        mem = f"{max(1024, kb // 1024 // 4)}m"
+    return cores, mem
+
+
 def get_spark(
     app: str = "honas_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    default_cpus, driver_mem = machine_defaults()
+    cpus = cpus or default_cpus
     shuffle_partitions = shuffle_partitions or cpus
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -57,10 +74,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-        # smaller splits than the 128m default: local[32] needs >=32
-        # concurrent scan tasks on ~1 GB inputs to use every core
+        # smaller splits than the 128m default: a many-core local
+        # session needs one concurrent scan task per core on ~1 GB inputs
         .config("spark.sql.files.maxPartitionBytes", "33554432")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # shuffle spill to tmpfs: this box has one virtual disk shared by
         # all cores, which serializes shuffle I/O; a real cluster has
         # NVMe per executor.  RAM-backed local dirs remove the artifact.

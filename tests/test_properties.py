@@ -36,6 +36,17 @@ def _build(keys, clients):
     return st_
 
 
+def _merge_partials(spec, states) -> SketchState:
+    """Run the serialized partials of one group through the production
+    merge kernel (sketch_agg._merge_by_group) and decode its row."""
+    from honas_spark.operators.sketch_agg import _merge_by_group
+
+    sub = pd.DataFrame([{"g": "g", **s.to_fields()} for s in states])
+    (out,) = _merge_by_group(spec, ["g"])(iter([sub]))
+    assert len(out) == 1
+    return SketchState.from_fields(spec, out.iloc[0])
+
+
 def _exact_eq(a: SketchState, b: SketchState) -> bool:
     return (
         np.array_equal(a.filters, b.filters)
@@ -138,14 +149,14 @@ def test_merge_rejects_spec_mismatch():
     clients_strategy,
 )
 def test_merge_many_equals_sequential_fold(key_lists, clients):
-    """The vectorized merge_many reduce must be bit-identical to folding
-    the same partials with pairwise merge()."""
+    """The production merge phase (_merge_by_group's vectorized reduce)
+    must be bit-identical to folding the same partials with pairwise
+    merge()."""
     states = [_build(ks, clients) for ks in key_lists]
     seq = states[0]
     for s in states[1:]:
         seq = seq.merge(s)
-    sub = pd.DataFrame([s.to_fields() for s in states])
-    vec = SketchState.merge_many(SPEC, sub)
+    vec = _merge_partials(SPEC, states)
     assert _exact_eq(seq, vec)
     assert np.array_equal(seq.cms, vec.cms)
     assert seq.first_ts == vec.first_ts or (
@@ -295,9 +306,9 @@ def test_bloom_cms_sparse_pack_roundtrip():
 
 
 def test_hll_sparse_through_merge_many(spark):
-    """merge_many over a mix of sparse- and dense-serialized partials
-    equals the object-level merge — the shuffle encoding is invisible
-    to the algebra."""
+    """The production merge phase over a mix of sparse- and
+    dense-serialized partials equals the object-level merge — the
+    shuffle encoding is invisible to the algebra."""
     import numpy as np
 
     from honas_spark.spec import SketchSpec
@@ -317,10 +328,7 @@ def test_hll_sparse_through_merge_many(spark):
             ),
         )
         states.append(st)
-    import pandas as pd
-
-    sub = pd.DataFrame([st.to_fields() for st in states])
-    merged = SketchState.merge_many(spec, sub)
+    merged = _merge_partials(spec, states)
     want = states[0].merge(states[1]).merge(states[2])
     assert np.array_equal(merged.hll_items, want.hll_items)
     assert np.array_equal(merged.hll_clients, want.hll_clients)

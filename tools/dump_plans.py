@@ -211,7 +211,7 @@ def main():
     import __spark_entry__ as E
     from honas_spark.session import get_spark
 
-    spark = get_spark(app="dump_plans", cpus=8)
+    spark = get_spark(app="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
     out = [
